@@ -137,3 +137,138 @@ def test_legacy_all_digit_uuid_dir_never_pins_retention(spark, tmp_path):
     assert all(Ledger._version_seq(d) < 10_000 for d in versions)
     assert led.read().count() == 1
     assert led.next_pending("t") is None
+
+
+def test_spark_written_snapshot_still_reads_and_mutates(spark, tmp_path):
+    """A ledger whose live snapshot was written by Spark (INT96
+    timestamps, LEDGER_SCHEMA, one ``v-...`` dir plus ``_LATEST``) is
+    read, mutated and read back with its timestamps intact."""
+    import datetime as dt
+    import os
+
+    import pyarrow.parquet as pq
+
+    from vertica_hadoop_integration__spark.ledger import LEDGER_SCHEMA
+
+    path = tmp_path / "legacy"
+    start = dt.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    done = dt.datetime(2024, 3, 2, 8, 0, 0, 654321)
+    version = "v-000000000003-abc123"
+    spark.createDataFrame(
+        [
+            ("t", "db", start, done, "m", "2024-01", "t", 8),
+            ("t", "db", start, None, "m", "2024-02", "f", 8),
+            ("dim", "db", start, None, None, None, "f", 2),
+        ],
+        LEDGER_SCHEMA,
+    ).coalesce(1).write.parquet(str(path / version))
+    (path / "_LATEST").write_text(version)
+    part = next(f for f in os.listdir(path / version) if f.endswith(".parquet"))
+    phys = pq.ParquetFile(str(path / version / part)).schema.column(2).physical_type
+    assert phys == "INT96"
+
+    led = Ledger(spark, str(path))
+    assert led.next_pending("t") == "2024-02"
+    assert led.next_pending("dim") is None and led.pending_exists("dim")
+    assert led.enqueue_new(["2024-01", "2024-02", "2024-03"], "t", "db", "m", 8) == 1
+    led.mark_complete("t", "2024-02")
+    led.mark_complete("dim", None)
+    rows = {
+        (r["table_name"], r["primary_partition_value"]): r
+        for r in led.read().collect()
+    }
+    assert len(rows) == 4
+    assert rows[("t", "2024-01")]["start_date"] == start
+    assert rows[("t", "2024-01")]["end_date"] == done
+    assert rows[("t", "2024-02")]["start_date"] == start
+    assert rows[("t", "2024-02")]["is_complete"] == "t"
+    assert rows[("t", "2024-02")]["end_date"] is not None
+    assert rows[("dim", None)]["is_complete"] == "t"
+    assert rows[("dim", None)]["num_mappers"] == 2
+    assert led.next_pending("t") == "2024-03"
+    # the engine session reads the driver-written timestamps as timestamps
+    assert isinstance(rows[("t", "2024-03")]["start_date"], dt.datetime)
+
+
+def test_concurrent_writers_lose_no_rows(spark, tmp_path):
+    """Writers enqueue different tables into one ledger path at the same
+    time; the write lock serializes each read-modify-write, so no
+    snapshot swap drops another writer's rows."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "shared")
+    tables = [f"t{k}" for k in range(6)]  # more writers than cores
+    errors = []
+
+    def writer(table):
+        try:
+            led = Ledger(spark, path)
+            for i in range(20):
+                led.enqueue_new([f"p{i:02d}"], table, "db", "m", 1)
+        except Exception as exc:  # surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in tables]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    rows = Ledger(spark, path).read().collect()
+    assert sorted((r["table_name"], r["primary_partition_value"]) for r in rows) == [
+        (t, f"p{i:02d}") for t in tables for i in range(20)
+    ]
+
+
+def test_ledger_calls_launch_no_spark_job(spark, tmp_path):
+    """The ledger is driver-side bookkeeping: none of its calls may
+    launch a Spark job."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(tracker.getJobIdsForGroup(group))
+
+    path = str(tmp_path / "nojobs")
+
+    def bookkeeping():
+        led = Ledger(spark, path)
+        led.enqueue_whole_table("dim", "db", 1)
+        led.enqueue_new(["2024-01", "2024-02"], "t", "db", "m", 1)
+        assert led.pending_exists("t")
+        assert led.next_pending("t") == "2024-01"
+        led.mark_complete("t", "2024-01")
+        assert led.apply_once("s#0", lambda: None)
+        led.delete_table("dim")
+
+    assert jobs_of("ledger-no-jobs", bookkeeping) == []
+    # the probe does see jobs: a Spark read of the same ledger launches one
+    assert jobs_of("ledger-spark-read", lambda: Ledger(spark, path).read().count())
+
+
+def test_apply_once_runs_each_key_once(spark, ledger):
+    calls = []
+    assert ledger.apply_once("s#1", calls.append, 1)
+    assert not ledger.apply_once("s#1", calls.append, 1)  # replay: skipped
+
+    def crash():
+        raise RuntimeError("crash before the mark")
+
+    with pytest.raises(RuntimeError):
+        ledger.apply_once("s#2", crash)
+    assert ledger.pending_exists("s#2")  # not marked: the replay runs it
+    assert ledger.apply_once("s#2", calls.append, 2)
+    assert calls == [1, 2]

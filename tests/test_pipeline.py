@@ -310,3 +310,28 @@ def test_csv_corrupt_record_preserves_raw_line(spark, sf_dir):
         assert r._corrupt_record.startswith("id_")
         assert "," in r._corrupt_record
         assert r.doc_id is None  # the unparseable typed field is NULL
+
+
+def test_null_partition_value_raises_and_writes_nothing(spark, tmp_path):
+    """A NULL partition value would alias the whole-table row and never
+    match the ledger on a re-run (the drain would rewrite ``full``
+    forever); the drain must refuse it before enqueueing anything."""
+    import pytest
+
+    src = spark.createDataFrame(
+        [(1, "2024-01"), (2, "2024-02"), (3, None)], "id int, m string"
+    )
+    spec = JobSpec(
+        table_name="t",
+        source_path="",
+        target_path=str(tmp_path / "out"),
+        primary_id="m",
+        num_partitions=1,
+        output_format="parquet",
+    )
+    ledger_path = str(tmp_path / "ledger")
+    for _ in range(2):
+        with pytest.raises(ValueError, match="'m'"):
+            run_incremental(spark, spec, src, ledger_path)
+    assert not os.path.exists(tmp_path / "out")
+    assert Ledger(spark, ledger_path).read().count() == 0

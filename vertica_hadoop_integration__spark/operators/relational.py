@@ -132,9 +132,9 @@ def salt_round_robin(df: DataFrame, num_buckets: int, dense: bool = False) -> Da
 # --- S14/S15: UPDATE / DELETE semantics on immutable storage --------------
 def update_where(df: DataFrame, cond: Column, assignments: dict[str, Column]) -> DataFrame:
     """``UPDATE t SET c=v, ... WHERE cond`` (sqoop_table.py:59-66) as a
-    projection: CASE WHEN cond THEN new ELSE old. Caller overwrites the
-    (small) ledger table with the result — see ledger.py for the atomic
-    commit protocol."""
+    projection: CASE WHEN cond THEN new ELSE old, for Spark tables. The
+    engine's own ledger edits its rows on the driver instead (ledger.py
+    ``mark_complete``); this is the DataFrame form of the same update."""
     out = df
     for name, value in assignments.items():
         out = out.withColumn(name, F.when(cond, value).otherwise(F.col(name)))

@@ -10,8 +10,8 @@ text staging, and Hive MR conversion disappear (SURVEY.md §3 E1).
 
 Scale: each iteration touches one partition's rows only (predicate
 pushdown prunes the rest); write parallelism = spec.num_partitions; the
-ledger is O(#partitions) and never joins against fact data except as a
-broadcast anti-join of distinct partition values.
+ledger is O(#partitions) driver-side rows and never touches fact data; only
+the distinct partition values are collected to the driver.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from .etl_logging import EtlLogger
 from .jobspec import JobSpec
 from .ledger import Ledger
 from .locking import FileLock
-from .operators.relational import pending_partition_pipeline
+from .operators.relational import distinct_partitions, rank_newest_first, skip_latest
 from .sources.writers import write_atomic
 
 
@@ -65,24 +65,16 @@ def enqueue_pending(
 ) -> int:
     """Discover and enqueue unseen partitions (generate_status_table,
     sqoop_table.py:131-148): distinct partition values, newest-first rank,
-    skip the SKIP_LATEST hottest, anti-join the ledger."""
+    skip the SKIP_LATEST hottest, collected once (one row per partition);
+    the ledger takes the set difference against what it has seen."""
     if not spec.primary_id:
         return ledger.enqueue_whole_table(
             spec.table_name, spec.target_db, spec.num_partitions
         )
-    seen = (
-        ledger.read()
-        .filter(F.col("table_name") == spec.table_name)
-        .select(F.col("primary_partition_value").alias("part"))
-    )
-    parts = pending_partition_pipeline(
-        source,
-        F.col(spec.primary_id).cast("string"),
-        seen,
-        skip_latest_n=spec.skip_latest,
-    )
+    parts = distinct_partitions(source, F.col(spec.primary_id).cast("string"))
+    kept = skip_latest(rank_newest_first(parts), spec.skip_latest)
     return ledger.enqueue_new(
-        parts,
+        [r["part"] for r in kept.select("part").collect()],
         spec.table_name,
         spec.target_db,
         spec.primary_id,

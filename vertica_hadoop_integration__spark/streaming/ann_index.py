@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..operators.similarity import assign_to_centroids, ivf_topk
 from ..sources.writers import write_atomic
 
@@ -45,13 +45,10 @@ def stream_embedding_index_load(
     table (centroid_id, centroid_vec) — write it once with
     bootstrap_centroids."""
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         cents = spark.read.parquet(centroids_dir)
         assigned = assign_to_centroids(batch_df, cents, id_col, vec_col)
         write_atomic(
@@ -59,7 +56,6 @@ def stream_embedding_index_load(
             os.path.join(deltas_dir, f"batch={key}"),
             output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = vectors.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

@@ -63,7 +63,7 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -173,13 +173,9 @@ def make_attribution_sink(
     report_path = report_dir.rstrip("/") + "/report"
     win_us = window_days * 86400 * 1_000_000
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    @once_per_batch(ledger_path, "attribution")
+    def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"attribution#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
         _migrate_legacy_state(spark, touch_dir)
         state = _latest_snapshot(spark, touch_dir, batch_id)
         # in-batch prior touch per row (the batch operator's window)
@@ -317,7 +313,10 @@ def make_attribution_sink(
             merged = batch_touch
         os.makedirs(touch_dir, exist_ok=True)
         write_atomic(merged, f"{touch_dir}/{batch_id}", output_format="parquet")
-        ledger.mark_complete(key, None)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not _land(batch_df, batch_id):
+            return  # replayed batch, already applied
         # prune snapshots this batch's commit made unreachable: every
         # LATER batch resolves a snapshot id >= this one, and a replay
         # of THIS batch is ledger-skipped, so ids < batch_id are dead

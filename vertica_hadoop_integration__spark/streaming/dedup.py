@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..operators.dedup import minhash_dedup, minhash_index, minhash_probe
 from ..sources.writers import write_atomic
 
@@ -85,13 +85,10 @@ def stream_dedup_load(
     bands_path = os.path.join(index_dir, "bands")
     verify_path = os.path.join(index_dir, "verify")
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already landed
         clean = _self_dedup(
             batch_df, text_col, id_col, num_hashes, bands, min_jaccard
         )
@@ -121,7 +118,6 @@ def stream_dedup_load(
         )
         new_bands.write.mode("append").parquet(bands_path)
         new_verify.write.mode("append").parquet(verify_path)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:
@@ -170,13 +166,10 @@ def stream_chunk_dedup_load(
         raise ValueError(f"unknown chunker: {chunker!r}")
     hash_path = os.path.join(index_dir, "chunk_hashes")
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already landed
         if chunker == "cdc":
             chunks = cdc_chunks(
                 batch_df,
@@ -208,7 +201,6 @@ def stream_chunk_dedup_load(
         kept.select(F.col("_h").alias("chunk_hash")).write.mode(
             "append"
         ).parquet(hash_path)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -135,13 +135,10 @@ def stream_drift_monitor(
     model = freeze_reference(reference, col, num_bins)
     bin_expr = _bin_expr(model["cuts"], col)
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         rows = (
             batch_df.select(bin_expr)
             .groupBy("bin")
@@ -174,7 +171,6 @@ def stream_drift_monitor(
         write_atomic(
             out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = values.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:
@@ -280,13 +276,10 @@ def stream_drift_monitor_by_group(
         )
     )
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         binned = (
             batch_df.join(cut_table, on=group_col, how="left")
             .select(
@@ -344,7 +337,6 @@ def stream_drift_monitor_by_group(
         write_atomic(
             out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = values.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

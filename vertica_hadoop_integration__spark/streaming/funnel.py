@@ -46,7 +46,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -86,13 +86,9 @@ def make_funnel_sink(
     report_path = report_dir.rstrip("/") + "/report"
     tcols = [f"t_{i}" for i in range(len(stages))]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    @once_per_batch(ledger_path, "funnel")
+    def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"funnel#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
         state = _latest_snapshot(spark, state_dir, batch_id)
         if state is None:
             state = spark.createDataFrame(
@@ -155,7 +151,10 @@ def make_funnel_sink(
             "stage_idx int, stage string, n_users bigint",
         )
         write_atomic(report, report_path, output_format="parquet")
-        ledger.mark_complete(key, None)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not _land(batch_df, batch_id):
+            return  # replayed batch, already applied
         for d in os.listdir(state_dir):
             if d.isdigit() and int(d) < batch_id:
                 shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..operators.text import inverted_index
 from ..sources.writers import write_atomic
 
@@ -43,20 +43,15 @@ def stream_index_load(
     """Start the index-maintaining ingest stream; returns the
     StreamingQuery. Deltas land under ``deltas_dir/batch=<id>``."""
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         delta = inverted_index(batch_df, text_col, id_col)
         write_atomic(
             delta,
             os.path.join(deltas_dir, f"batch={key}"),
             output_format="parquet",
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

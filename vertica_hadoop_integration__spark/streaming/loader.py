@@ -17,7 +17,7 @@ import shutil
 
 from pyspark.sql import DataFrame
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -39,18 +39,12 @@ def stream_load(
     write-then-flip ordering as the batch pipeline (exactly-once to an
     idempotent sink). Returns the StreamingQuery."""
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed, already complete
         write_atomic(
-            batch_df, os.path.join(dest_dir, f"batch={key}"),
+            batch_df, os.path.join(dest_dir, f"batch={batch_id}"),
             output_format=output_format,
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = events.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:
@@ -86,20 +80,15 @@ def stream_partitioned_load(
     StreamingQuery."""
     import uuid as _uuid
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed, already complete
-        dest = os.path.join(dest_dir, f"batch={key}")
+        dest = os.path.join(dest_dir, f"batch={batch_id}")
         if os.path.exists(dest):
             # Crash window: the rename landed but mark_complete did not.
             # The batch directory is complete (os.replace is atomic), so
-            # the replay must only finish the bookkeeping — re-writing
-            # would raise ENOTEMPTY on the replace and wedge the stream.
-            ledger.mark_complete(f"{table_name}#{key}", None)
+            # the replay must only finish the bookkeeping (the guard marks
+            # the key on return) — re-writing would raise ENOTEMPTY on
+            # the replace and wedge the stream.
             return
         tmp = os.path.join(dest_dir, f".inprogress-{_uuid.uuid4().hex[:8]}")
         try:
@@ -112,7 +101,6 @@ def stream_partitioned_load(
         finally:
             if os.path.exists(tmp):
                 shutil.rmtree(tmp, ignore_errors=True)
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = events.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

@@ -47,7 +47,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -86,13 +86,9 @@ def make_retention_sink(
     report_path = report_dir.rstrip("/") + "/report"
     per = {"week": 7, "day": 1}[granularity]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    @once_per_batch(ledger_path, "retention")
+    def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"retention#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
         state = _latest_snapshot(spark, state_dir, batch_id)
         pairs = (
             batch_df.select(
@@ -173,7 +169,10 @@ def make_retention_sink(
         write_atomic(
             advanced, f"{state_dir}/{batch_id}", output_format="parquet"
         )
-        ledger.mark_complete(key, None)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not _land(batch_df, batch_id):
+            return  # replayed batch, already applied
         for d in os.listdir(state_dir):
             if d.isdigit() and int(d) < batch_id:
                 shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)

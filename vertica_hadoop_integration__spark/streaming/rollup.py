@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..operators.temporal import refresh_rollup
 from ..sources.writers import write_atomic
 
@@ -43,13 +43,10 @@ def stream_rollup_refresh(
     scans; a dashboard reads it between batches and always sees whole
     committed partitions."""
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         write_atomic(
             batch_df,
             os.path.join(raw_dir, f"batch={key}"),
@@ -69,7 +66,6 @@ def stream_rollup_refresh(
             ts_col=ts_col, key_cols=key_cols, value_col=value_col,
             granularities=granularities,
         )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = events.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:

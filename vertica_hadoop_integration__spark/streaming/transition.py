@@ -49,7 +49,7 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -88,13 +88,9 @@ def make_transition_sink(
     state_dir = last_dir_for(report_dir)
     report_path = report_dir.rstrip("/") + "/report"
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    @once_per_batch(ledger_path, "transition")
+    def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
-        key = f"transition#{batch_id}"
-        ledger.enqueue_whole_table(key, "stream", 1)
-        if not ledger.pending_exists(key):
-            return  # replayed batch, already applied
         state = _latest_snapshot(spark, state_dir, batch_id)
         rows = batch_df.select(
             F.col(user_col).alias("_u"),
@@ -183,7 +179,10 @@ def make_transition_sink(
             merged = batch_last
         os.makedirs(state_dir, exist_ok=True)
         write_atomic(merged, f"{state_dir}/{batch_id}", output_format="parquet")
-        ledger.mark_complete(key, None)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not _land(batch_df, batch_id):
+            return  # replayed batch, already applied
         for d in os.listdir(state_dir):
             if d.isdigit() and int(d) < batch_id:
                 shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)

@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ledger import Ledger
+from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
 
 
@@ -80,13 +80,10 @@ def stream_trending_load(
     StreamingQuery. ``trending_dir`` is partitioned by window_start day
     (``part_day``) so readers and the per-batch overwrite both prune."""
 
+    @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        ledger = Ledger(spark, ledger_path)
         key = str(batch_id)
-        ledger.enqueue_whole_table(f"{table_name}#{key}", "stream", 1)
-        if not ledger.pending_exists(f"{table_name}#{key}"):
-            return  # replayed batch, already applied
         delta = window_counts(batch_df, window=window, ts_col=ts_col)
         write_atomic(
             delta,
@@ -122,7 +119,6 @@ def stream_trending_load(
                 .partitionBy("part_day")
                 .parquet(trending_dir)
             )
-        ledger.mark_complete(f"{table_name}#{key}", None)
 
     writer = events.writeStream.foreachBatch(_sink).outputMode("append")
     if checkpoint_dir:
