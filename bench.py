@@ -236,7 +236,40 @@ HEADLINE = [
 ]
 
 
+SOURCE_PATHS = ("vertica_hadoop_integration__spark", "bench.py")
+
+
+def source_digest(root: str | None = None) -> str:
+    """sha256 over the engine package and this script as they are on disk,
+    committed or not: the provenance key that ties a timing artifact to
+    the exact source it measured (a commit SHA misses uncommitted edits)."""
+    import hashlib
+
+    root = root or os.path.dirname(os.path.abspath(__file__))
+    files = []
+    for rel in SOURCE_PATHS:
+        path = os.path.join(root, rel)
+        if os.path.isfile(path):
+            files.append(rel)
+            continue
+        for dirpath, dirnames, filenames in os.walk(path):
+            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+            files.extend(
+                os.path.relpath(os.path.join(dirpath, n), root)
+                for n in filenames if not n.endswith(".pyc")
+            )
+    h = hashlib.sha256()
+    for rel in sorted(f.replace(os.sep, "/") for f in files):
+        with open(os.path.join(root, rel), "rb") as fh:
+            body = hashlib.sha256(fh.read()).hexdigest()
+        h.update(f"{rel}\0{body}\n".encode())
+    return h.hexdigest()
+
+
 def main() -> None:
+    # stamped before any timing so an edit made while the suite runs
+    # cannot be credited with these numbers
+    digest = source_digest()
     from vertica_hadoop_integration__spark.plans import QUERIES
     from vertica_hadoop_integration__spark.session import get_session
 
@@ -500,7 +533,8 @@ def main() -> None:
     }
     # provenance stamp (r09 ADVICE): the regression gate in
     # tests/test_bench.py validates that its basis artifact was produced
-    # from the CURRENT source tree, not a stale frozen one.
+    # from the CURRENT source tree, not a stale frozen one — by
+    # "source_digest"; the commit SHA is kept as a readable label.
     git_sha = None
     try:
         import subprocess
@@ -522,6 +556,7 @@ def main() -> None:
         "value": round(total, 4),
         "unit": "sec",
         "git_sha": git_sha,
+        "source_digest": digest,
         "loadavg": loadavg,
         "breaches": breaches,
         "queries": times,
@@ -548,7 +583,7 @@ def main() -> None:
             "under 'remeasured', pre-re-measure totals under "
             "'value_in_loop'/'suite_median_in_loop'; breaches keyed on "
             "median of all trials under 'breaches'; provenance under "
-            "'git_sha'/'loadavg'. Multimodal note: the fixture "
+            "'git_sha'/'source_digest'/'loadavg'. Multimodal note: the fixture "
             "synthesizers (operators/multimodal.py::_FIXTURE_CACHE) "
             "memoize the few-KB class-periodic media payloads per Python "
             "worker — input synthesis standing in for 'read media from "

@@ -18,3 +18,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(group, fn)`` runs ``fn`` under job group ``group`` and
+    returns the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs_of

@@ -46,10 +46,10 @@ def test_per_query_budget_vs_round5():
     the builder runs bench.py with SPARK_GRAFT_CLOSEOUT=1 on a quiet
     host (r08: a 153s ambient burst in a driver-overwritten
     bench_full_latest.json failed this suite with zero code change) —
-    but ONLY while its recorded git SHA still matches the current
-    source tree; once source changes land, the gate falls back to a
-    current bench_full_latest.json, and if neither artifact reflects
-    HEAD it FAILS loudly instead of silently validating a frozen file.
+    but ONLY while its recorded source digest still matches the source
+    on disk; once the source changes, the gate falls back to a current
+    bench_full_latest.json, and if neither artifact reflects the current
+    source it FAILS loudly instead of silently validating a frozen file.
 
     Known sensitivity: Arrow/Python-worker-bound queries (multimodal_*)
     pay worker-pool spin-up that host-level ambient load inflates far
@@ -59,7 +59,6 @@ def test_per_query_budget_vs_round5():
     regression."""
     import json
     import os
-    import subprocess
 
     import pytest
 
@@ -74,29 +73,24 @@ def test_per_query_budget_vs_round5():
 
     # Staleness guard (r09 ADVICE): the committed close-out passed by
     # construction when it was frozen, so gating on it alone degenerates
-    # to validating a static file.  Each bench artifact now records the
-    # git SHA it ran at; an artifact is a valid gate basis only if no
-    # SOURCE file (engine package, bench.py) changed between that SHA
-    # and HEAD.  Preference order: quiet-host close-out, then the most
+    # to validating a static file.  Each bench artifact records
+    # bench.source_digest() — a hash of the engine package and bench.py
+    # as they were on disk when it ran; an artifact is a valid gate basis
+    # only if that digest equals the digest of the source on disk now.
+    # (The earlier key, "no source diff between the artifact's git SHA
+    # and HEAD", could not see uncommitted edits: a change under test
+    # passed against numbers measured before it, and failed once
+    # committed.)  Preference order: quiet-host close-out, then the most
     # recent (possibly loaded-host) full run — the ambient-median
     # normalization below absorbs host load either way.  If NEITHER
     # artifact reflects current code, fail loudly: run
     # SPARK_GRAFT_CLOSEOUT=1 python bench.py (quiet host) to refresh.
+    from bench import source_digest
+
+    digest_now = source_digest(root)
+
     def _current(artifact: dict) -> bool:
-        sha = artifact.get("git_sha")
-        if not sha:
-            return False
-        try:
-            diff = subprocess.run(
-                ["git", "diff", "--name-only", sha, "HEAD", "--",
-                 "vertica_hadoop_integration__spark", "bench.py"],
-                capture_output=True, text=True, timeout=15, cwd=root,
-            )
-            if diff.returncode != 0:
-                return False
-            return diff.stdout.strip() == ""
-        except Exception:  # noqa: BLE001
-            return False
+        return artifact.get("source_digest") == digest_now
 
     latest = None
     basis = None
@@ -108,9 +102,9 @@ def test_per_query_budget_vs_round5():
             candidate = json.load(fh)
         if candidate.get("sf") != 0.1:
             continue
-        # r10 ADVICE: the one transition round for pre-stamp artifacts
-        # is over — a basis artifact with NO git_sha is treated as stale
-        # (otherwise stripping the key would silently defeat the guard).
+        # r10 ADVICE: a basis artifact with NO provenance stamp is
+        # treated as stale (otherwise stripping the key would silently
+        # defeat the guard).
         if not _current(candidate):
             continue
         latest, basis = candidate, fname

@@ -227,21 +227,9 @@ def test_concurrent_writers_lose_no_rows(spark, tmp_path):
     ]
 
 
-def test_ledger_calls_launch_no_spark_job(spark, tmp_path):
+def test_ledger_calls_launch_no_spark_job(spark, spark_jobs, tmp_path):
     """The ledger is driver-side bookkeeping: none of its calls may
     launch a Spark job."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return list(tracker.getJobIdsForGroup(group))
-
     path = str(tmp_path / "nojobs")
 
     def bookkeeping():
@@ -254,9 +242,9 @@ def test_ledger_calls_launch_no_spark_job(spark, tmp_path):
         assert led.apply_once("s#0", lambda: None)
         led.delete_table("dim")
 
-    assert jobs_of("ledger-no-jobs", bookkeeping) == []
+    assert spark_jobs("ledger-no-jobs", bookkeeping) == []
     # the probe does see jobs: a Spark read of the same ledger launches one
-    assert jobs_of("ledger-spark-read", lambda: Ledger(spark, path).read().count())
+    assert spark_jobs("ledger-spark-read", lambda: Ledger(spark, path).read().count())
 
 
 def test_apply_once_runs_each_key_once(spark, ledger):

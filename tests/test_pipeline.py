@@ -335,3 +335,171 @@ def test_null_partition_value_raises_and_writes_nothing(spark, tmp_path):
             run_incremental(spark, spec, src, ledger_path)
     assert not os.path.exists(tmp_path / "out")
     assert Ledger(spark, ledger_path).read().count() == 0
+
+
+def _m_spec(tmp_path, num_partitions=2, skip_latest=0):
+    return JobSpec(
+        table_name="t",
+        source_path="",
+        target_path=str(tmp_path / "out"),
+        primary_id="m",
+        num_partitions=num_partitions,
+        skip_latest=skip_latest,
+        output_format="parquet",
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_drain_commits_special_values_to_their_own_dirs(spark, tmp_path):
+    """Spark %XX-escapes partition dir names and writes '' as
+    __HIVE_DEFAULT_PARTITION__; every value must still land, with only its
+    rows and a _SUCCESS marker, at ``<target>/m=<value>``."""
+    values = ["a:b", "50%", "k=v", "x#y", "sp ace", "héllo", "", "a/b",
+              "__HIVE_DEFAULT_PARTITION__"]
+    src = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values * 3)], "id int, m string"
+    )
+    spec = _m_spec(tmp_path)
+    done = run_incremental(spark, spec, src, str(tmp_path / "ledger"))
+    want = [os.path.join(spec.target_path, f"m={v}") for v in sorted(values)]
+    assert done == want
+    for v, d in zip(sorted(values), done):
+        assert os.path.exists(os.path.join(d, "_SUCCESS"))
+        assert _rows(spark.read.parquet(d)) == _rows(src.filter(F.col("m") == v))
+
+
+def test_drain_gives_a_rowless_value_an_empty_dir(spark, tmp_path):
+    """A pending value with no source rows (left by an earlier run) still
+    gets a readable 0-row dir with the source's schema, and its flip."""
+    src = spark.createDataFrame(
+        [(1, "2024-01"), (2, "2024-02")], "id int, m string"
+    )
+    spec = _m_spec(tmp_path)
+    ledger_path = str(tmp_path / "ledger")
+    Ledger(spark, ledger_path).enqueue_new(["2023-12"], "t", "default", "m", 2)
+    done = run_incremental(spark, spec, src, ledger_path)
+    assert [os.path.basename(d) for d in done] == ["m=2023-12", "m=2024-01", "m=2024-02"]
+    empty = spark.read.parquet(done[0])
+    assert empty.schema == src.schema and empty.count() == 0
+    assert os.path.exists(os.path.join(done[0], "_SUCCESS"))
+    assert not Ledger(spark, ledger_path).pending_exists("t")
+
+
+def _debris(root):
+    return [
+        name
+        for _, dirs, files in os.walk(root)
+        for name in dirs + files
+        if ".inprogress" in name or ".replaced" in name
+    ]
+
+
+def _fail_after_write(monkeypatch, module):
+    """Make ``module.write_columnar`` write its files, then raise."""
+    write_columnar = module.write_columnar
+
+    def failing(df, path, **kwargs):
+        write_columnar(df, path, **kwargs)
+        raise OSError("write failed")
+
+    monkeypatch.setattr(module, "write_columnar", failing)
+
+
+def test_drain_write_failure_removes_its_staging(spark, tmp_path, monkeypatch):
+    import pytest
+
+    from vertica_hadoop_integration__spark import pipeline
+
+    src = spark.createDataFrame(
+        [(i, f"2024-0{i % 3 + 1}") for i in range(30)], "id int, m string"
+    )
+    spec = _m_spec(tmp_path)
+    ledger_path = str(tmp_path / "ledger")
+    _fail_after_write(monkeypatch, pipeline)
+    with pytest.raises(OSError, match="write failed"):
+        run_incremental(spark, spec, src, ledger_path)
+    assert os.listdir(spec.target_path) == []
+    assert Ledger(spark, ledger_path).pending("t") == ["2024-01", "2024-02", "2024-03"]
+
+
+def test_write_atomic_failed_write_leaves_committed_data_and_no_debris(
+    spark, tmp_path, monkeypatch
+):
+    import pytest
+
+    from vertica_hadoop_integration__spark.sources import writers
+
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "id int, m string")
+    path = str(tmp_path / "t")
+    write_atomic(src, path, output_format="parquet")
+    _fail_after_write(monkeypatch, writers)
+    with pytest.raises(OSError, match="write failed"):
+        write_atomic(src.limit(1), path, output_format="parquet")
+    assert spark.read.parquet(path).count() == 2
+    assert _debris(tmp_path) == []
+
+
+def test_drain_resumes_after_crash_between_commit_and_flip(spark, tmp_path, monkeypatch):
+    """A crash after a partition's dir is committed but before its ledger
+    flip: the re-run rewrites that partition and the rest, purges the
+    dead run's staging, and ends with the same data as a clean drain."""
+    import pytest
+
+    src = spark.createDataFrame(
+        [(i, f"2024-{i % 6 + 1:02d}") for i in range(60)], "id int, m string"
+    )
+    months = [f"2024-{k:02d}" for k in range(1, 7)]
+    spec = _m_spec(tmp_path)
+    ledger_path = str(tmp_path / "ledger")
+    flips = []
+    mark_complete = Ledger.mark_complete
+
+    def crash_on_third(self, table_name, value):
+        flips.append(value)
+        if len(flips) == 3:
+            raise RuntimeError("crash before flip")
+        mark_complete(self, table_name, value)
+
+    monkeypatch.setattr(Ledger, "mark_complete", crash_on_third)
+    with pytest.raises(RuntimeError, match="crash before flip"):
+        run_incremental(spark, spec, src, ledger_path)
+    monkeypatch.undo()
+    assert Ledger(spark, ledger_path).pending("t") == months[2:]
+    assert os.path.isdir(os.path.join(spec.target_path, f"m={months[2]}"))
+    os.makedirs(os.path.join(spec.target_path, ".inprogress-deadbeef", "junk"))
+
+    rest = run_incremental(spark, spec, src, ledger_path)
+    assert rest == [os.path.join(spec.target_path, f"m={m}") for m in months[2:]]
+    assert not Ledger(spark, ledger_path).pending_exists("t")
+    assert _debris(spec.target_path) == []
+
+    clean = _m_spec(tmp_path / "clean")
+    run_incremental(spark, clean, src, str(tmp_path / "clean_ledger"))
+    for m in months:
+        got = spark.read.parquet(os.path.join(spec.target_path, f"m={m}"))
+        want = spark.read.parquet(os.path.join(clean.target_path, f"m={m}"))
+        assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_drain_job_count_does_not_grow_with_partitions(spark, spark_jobs, tmp_path):
+    """One drain is one write: 8 partitions launch as many Spark jobs as
+    2, and each partition dir still gets ``num_partitions`` files."""
+    src = spark.range(800).select(
+        F.col("id"), F.format_string("2024-%02d", F.col("id") % 8 + 1).alias("m")
+    )
+    jobs = {}
+    for n in (2, 8):
+        spec = _m_spec(tmp_path / str(n), num_partitions=3, skip_latest=8 - n)
+        jobs[n] = spark_jobs(
+            f"drain-{n}",
+            lambda: run_incremental(spark, spec, src, str(tmp_path / f"ledger{n}")),
+        )
+        dirs = sorted(os.listdir(spec.target_path))
+        assert len(dirs) == n
+        for d in dirs:
+            files = os.listdir(os.path.join(spec.target_path, d))
+            assert len([f for f in files if not f.startswith((".", "_"))]) == 3
+    assert len(jobs[8]) == len(jobs[2])

@@ -63,6 +63,18 @@ LEDGER_SCHEMA = from_arrow_schema(_ARROW_SCHEMA)
 _POINTER = "_LATEST"
 
 
+def reject_null_partitions(
+    values: Iterable[str | None], table_name: str, partition_column: str | None
+) -> None:
+    """A NULL partition value would alias the whole-table row and never
+    match on a re-run: raise before anything is enqueued."""
+    if any(v is None for v in values):
+        raise ValueError(
+            f"partition column {partition_column!r} of {table_name!r} has "
+            "NULL values; encode them as a non-NULL string first"
+        )
+
+
 def _pending_row(table_name, hive_db, column, value, num_mappers) -> dict:
     return {
         "table_name": table_name,
@@ -186,12 +198,17 @@ class Ledger:
                 rows += table.cast(_ARROW_SCHEMA).to_pylist()
         return rows
 
-    def _pending(self, table_name: str) -> list[str | None]:
-        return [
-            r["primary_partition_value"]
-            for r in self._rows()
-            if r["table_name"] == table_name and r["is_complete"] == "f"
-        ]
+    def pending(self, table_name: str) -> list[str | None]:
+        """Every pending value of the table, oldest first: NULL (the
+        whole-table row) first, then ascending."""
+        return sorted(
+            (
+                r["primary_partition_value"]
+                for r in self._rows()
+                if r["table_name"] == table_name and r["is_complete"] == "f"
+            ),
+            key=lambda v: (v is not None, v or ""),
+        )
 
     def read(self) -> DataFrame:
         version = self._current_version()
@@ -217,11 +234,7 @@ class Ledger:
         if isinstance(parts, DataFrame):
             parts = [r[0] for r in parts.select(F.col("part").cast("string")).collect()]
         values = list(dict.fromkeys(parts))
-        if None in values:
-            raise ValueError(
-                f"partition column {partition_column!r} of {table_name!r} has "
-                "NULL values; encode them as a non-NULL string first"
-            )
+        reject_null_partitions(values, table_name, partition_column)
         with self._write_lock:
             rows = self._rows()
             seen = {
@@ -254,16 +267,11 @@ class Ledger:
 
     # -- S1/S2: oldest pending (sqoop_table.py:39-52) ----------------------
     def next_pending(self, table_name: str) -> str | None:
-        # NULL (the whole-table row) first, then ascending
-        return min(
-            self._pending(table_name),
-            key=lambda v: (v is not None, v or ""),
-            default=None,
-        )
+        return next(iter(self.pending(table_name)), None)
 
     # -- S3: existence probe (sqoop_table.py:106-112) ----------------------
     def pending_exists(self, table_name: str) -> bool:
-        return bool(self._pending(table_name))
+        return bool(self.pending(table_name))
 
     # -- S14: mark complete (sqoop_table.py:59-66) -------------------------
     def mark_complete(self, table_name: str, partition_value: str | None) -> None:

@@ -22,6 +22,14 @@ _DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """16g, or half the host's physical memory when that is smaller: a
+    heap sized past what the host can back gets the JVM killed by the OOM
+    killer mid-run instead of spilling or failing one task."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_session(
     app_name: str = "spark-etl-engine",
     master: str | None = None,
@@ -69,7 +77,8 @@ def get_session(
         # (observed: broadcast OOM at 50k-doc dedup). No-op if the JVM is
         # already up (driver-owned sessions keep their own setting).
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     )
     if master is None and not os.environ.get("SPARK_MASTER"):

@@ -107,18 +107,12 @@ def write_sorted(
     write_columnar(ranged, path, output_format=output_format, **kwargs)
 
 
-def write_atomic(
-    df: DataFrame,
-    final_path: str,
-    **kwargs,
-) -> None:
-    """Write to ``<final>.inprogress-<id>`` then rename into place.
+def replace_dir(tmp: str, final_path: str) -> None:
+    """Commit the finished directory ``tmp`` as ``final_path`` by rename.
 
     Local/HDFS rename is atomic at the directory level; on object stores
-    swap this for a manifest commit. Guarantees a reader never sees a
-    half-written partition directory, and a crashed job leaves only an
-    ``.inprogress`` dir that a re-run ignores (idempotence via the ledger's
-    is_complete flag).
+    swap this for a manifest commit. A reader never sees a half-written
+    directory.
 
     Overwrite path: the previous committed directory is atomically moved
     ASIDE (never deleted in place) before the new one is renamed in — a
@@ -126,9 +120,8 @@ def write_atomic(
     ``<final>.replaced-<id>`` instead of permanently lost, and a
     concurrent reader that resolved the path before the swap still reads
     a complete directory. The aside copy is deleted only after the new
-    directory is committed."""
-    tmp = f"{final_path}.inprogress-{uuid.uuid4().hex[:8]}"
-    write_columnar(df, tmp, **kwargs)
+    directory is committed. Missing parent directories are created."""
+    os.makedirs(os.path.dirname(final_path) or ".", exist_ok=True)
     aside = None
     if os.path.exists(final_path):
         aside = f"{final_path}.replaced-{uuid.uuid4().hex[:8]}"
@@ -141,6 +134,23 @@ def write_atomic(
         raise
     if aside is not None:
         shutil.rmtree(aside, ignore_errors=True)
+
+
+def write_atomic(
+    df: DataFrame,
+    final_path: str,
+    **kwargs,
+) -> None:
+    """Write to ``<final>.inprogress-<id>``, then :func:`replace_dir` it
+    into place. A write that raises removes its ``.inprogress`` dir, so a
+    failed job leaves the committed data as it was and no debris beside
+    it (idempotence via the ledger's is_complete flag)."""
+    tmp = f"{final_path}.inprogress-{uuid.uuid4().hex[:8]}"
+    try:
+        write_columnar(df, tmp, **kwargs)
+        replace_dir(tmp, final_path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def write_partitioned(
