@@ -327,3 +327,30 @@ def test_no_cross_invocation_result_memo():
                             "with a justification; if it is a memo, remove it"
                         )
     assert not offenders, "\n".join(offenders)
+
+
+def test_one_stream_starter():
+    """Every foreachBatch stream starts through one function: ``.writeStream``
+    is referenced in exactly one engine function, and no engine function
+    takes a ``trigger_available_now`` parameter (a per-starter trigger
+    knob that no caller set)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "vertica_hadoop_integration__spark"
+    starters, knobs = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+            if any(a.arg == "trigger_available_now" for a in args):
+                knobs.append(f"{rel}:{fn.lineno} {fn.name}")
+            if any(
+                isinstance(n, ast.Attribute) and n.attr == "writeStream"
+                for n in ast.walk(fn)
+            ):
+                starters.add(f"{rel}::{fn.name}")
+    assert len(starters) == 1, sorted(starters)
+    assert not knobs, knobs

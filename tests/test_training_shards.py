@@ -68,8 +68,9 @@ def test_rewrite_identical_and_resalt_differs(spark, sf_dir, shard_dir, tmp_path
     # atomic overwrite of the SAME path reproduces the permutation
     write_training_shards(d, shard_dir, n_shards=N_SHARDS)
     assert snapshot(shard_dir) == before
-    assert not glob.glob(shard_dir + ".inprogress-*")
-    assert not glob.glob(shard_dir + ".replaced-*")
+    parent, name = os.path.split(shard_dir)
+    assert not glob.glob(os.path.join(parent, f".{name}.inprogress-*"))
+    assert not glob.glob(os.path.join(parent, f".{name}.replaced-*"))
     # a new salt is a different epoch permutation over the same docs
     other = str(tmp_path / "epoch2")
     write_training_shards(d, other, n_shards=N_SHARDS, salt="epoch2")

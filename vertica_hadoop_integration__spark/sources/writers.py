@@ -9,7 +9,11 @@ same job.
 Commit protocol for exactly-once per-partition loads: write to a temp dir,
 fsync-rename into place, only then flip the ledger flag — same ordering as
 the reference's extract -> convert -> cleanup -> mark-complete sequence
-(sqoop_etl.py:43-46).
+(sqoop_etl.py:43-46). The temp dir and the moved-aside old copy are
+HIDDEN siblings (``.<name>.inprogress-<id>`` / ``.<name>.replaced-<id>``):
+Spark's file listing skips names starting with ``.``, so neither a glob
+read (``d/batch=*``) nor partition discovery (``d``) sees a write in
+flight or a killed write's leftovers.
 """
 
 from __future__ import annotations
@@ -107,6 +111,13 @@ def write_sorted(
     write_columnar(ranged, path, output_format=output_format, **kwargs)
 
 
+def _staging_name(final_path: str, tag: str) -> str:
+    """``<parent>/.<name>.<tag>-<id>``: a sibling of ``final_path`` on the
+    same filesystem (so the rename is atomic) that readers skip."""
+    parent, name = os.path.split(os.path.normpath(final_path))
+    return os.path.join(parent, f".{name}.{tag}-{uuid.uuid4().hex[:8]}")
+
+
 def replace_dir(tmp: str, final_path: str) -> None:
     """Commit the finished directory ``tmp`` as ``final_path`` by rename.
 
@@ -116,15 +127,16 @@ def replace_dir(tmp: str, final_path: str) -> None:
 
     Overwrite path: the previous committed directory is atomically moved
     ASIDE (never deleted in place) before the new one is renamed in — a
-    crash between the two renames leaves the old data recoverable at
-    ``<final>.replaced-<id>`` instead of permanently lost, and a
+    crash between the two renames leaves the old data at the hidden
+    ``<parent>/.<name>.replaced-<id>`` instead of permanently lost, and a
     concurrent reader that resolved the path before the swap still reads
     a complete directory. The aside copy is deleted only after the new
     directory is committed. Missing parent directories are created."""
+    final_path = os.path.normpath(final_path)
     os.makedirs(os.path.dirname(final_path) or ".", exist_ok=True)
     aside = None
     if os.path.exists(final_path):
-        aside = f"{final_path}.replaced-{uuid.uuid4().hex[:8]}"
+        aside = _staging_name(final_path, "replaced")
         os.replace(final_path, aside)
     try:
         os.replace(tmp, final_path)
@@ -141,11 +153,14 @@ def write_atomic(
     final_path: str,
     **kwargs,
 ) -> None:
-    """Write to ``<final>.inprogress-<id>``, then :func:`replace_dir` it
-    into place. A write that raises removes its ``.inprogress`` dir, so a
-    failed job leaves the committed data as it was and no debris beside
-    it (idempotence via the ledger's is_complete flag)."""
-    tmp = f"{final_path}.inprogress-{uuid.uuid4().hex[:8]}"
+    """Write to the hidden ``<parent>/.<name>.inprogress-<id>``, then
+    :func:`replace_dir` it into place (``kwargs`` go to
+    :func:`write_columnar`, ``partition_by`` included). An existing
+    ``final_path`` is replaced whole, never appended to. A write that
+    raises removes its staging dir, so a failed job leaves the committed
+    data as it was and no debris beside it (idempotence via the ledger's
+    is_complete flag); a killed one leaves only hidden debris."""
+    tmp = _staging_name(final_path, "inprogress")
     try:
         write_columnar(df, tmp, **kwargs)
         replace_dir(tmp, final_path)
@@ -286,7 +301,7 @@ def write_training_shards(
     ``salt`` is a fresh epoch permutation at the cost of one rewrite.
 
     The write itself goes through :func:`write_atomic` — a crashed job
-    leaves only an ``.inprogress`` directory, a re-run replaces
+    leaves only a hidden ``.inprogress`` directory, a re-run replaces
     committed output atomically."""
     from ..operators.corpus import shuffle_shards
 

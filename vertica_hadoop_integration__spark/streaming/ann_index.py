@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..ledger import once_per_batch
 from ..operators.similarity import assign_to_centroids, ivf_topk
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def stream_embedding_index_load(
@@ -38,7 +39,6 @@ def stream_embedding_index_load(
     vec_col: str = "embedding",
     table_name: str = "ivf_index",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the IVF-maintaining embedding ingest; returns the
     StreamingQuery. ``centroids_dir`` must hold the bootstrap centroid
@@ -57,12 +57,7 @@ def stream_embedding_index_load(
             output_format="parquet",
         )
 
-    writer = vectors.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(vectors, _sink, checkpoint_dir)
 
 
 def bootstrap_centroids(

@@ -58,13 +58,18 @@ write and the ledger mark converges to the same report
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import (
+    land_delta,
+    latest_snapshot,
+    prune_after_land,
+    start_stream,
+)
 
 
 def touch_dir_for(report_dir: str) -> str:
@@ -83,7 +88,7 @@ def _migrate_legacy_state(spark, touch_dir: str) -> None:
     """One-shot upgrade of pre-r10 in-place touch state (r10 ADVICE):
     the r10 snapshot-per-batch rework left a pre-existing deployment's
     parquet files sitting DIRECTLY under ``touch_dir`` (and without the
-    ``t_id`` column), where ``_latest_snapshot``'s digit-only listing
+    ``t_id`` column), where ``sink.latest_snapshot``'s digit-only listing
     ignores them — so the first post-upgrade batch would silently treat
     every user as having no carried touch and attribute straddling
     conversions NULL/organic.
@@ -136,24 +141,6 @@ def _migrate_legacy_state(spark, touch_dir: str) -> None:
                 pass
 
 
-def _latest_snapshot(spark, touch_dir: str, before_batch_id: int):
-    """The newest committed touch-state snapshot with id < the current
-    batch id, or None.  Committed snapshots are enumerated by EXACT
-    digit name (a glob would also match write_atomic staging leftovers);
-    the strict < bound is the replay guard — a replayed batch never
-    sees its own first-attempt snapshot."""
-    try:
-        ids = [
-            int(d) for d in os.listdir(touch_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{touch_dir}/{max(ids)}")
-
-
 def make_attribution_sink(
     report_dir: str,
     ledger_path: str,
@@ -177,7 +164,7 @@ def make_attribution_sink(
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         _migrate_legacy_state(spark, touch_dir)
-        state = _latest_snapshot(spark, touch_dir, batch_id)
+        state = latest_snapshot(spark, touch_dir, batch_id)
         # in-batch prior touch per row (the batch operator's window)
         w = (
             Window.partitionBy(user_col)
@@ -255,24 +242,8 @@ def make_attribution_sink(
             F.count(F.lit(1)).cast("bigint").alias("n_conversions"),
             F.sum(F.col(value_col).cast("decimal(38,6)")).alias("_v"),
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(
-            delta, f"{deltas_root}/{batch_id}", output_format="parquet"
-        )
-        # refresh the serving report from ALL deltas (self-healing: a
-        # replay overwrites its delta, the re-sum converges).  Committed
-        # delta dirs are enumerated by EXACT name — a glob would also
-        # match a crashed write_atomic's ``<id>.inprogress-*`` /
-        # ``<id>.replaced-*`` staging leftovers and double-count.  The
-        # listing is driver-side but bounded by batch count, the same
-        # cardinality the ledger already tracks.
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
-        all_deltas = spark.read.parquet(*committed)
+        # refresh the serving report from ALL committed deltas
+        all_deltas = land_delta(delta, report_dir, batch_id)
         report = all_deltas.groupBy("attributed_type").agg(
             F.sum("n_conversions").cast("bigint").alias("n_conversions"),
             F.sum("_v").cast("double").alias("total_value"),
@@ -281,7 +252,7 @@ def make_attribution_sink(
         # advance the touch state: per-user latest non-conversion touch,
         # written as THIS batch's snapshot (never in place — replays of
         # later batches resolve strictly-earlier snapshots, see
-        # _latest_snapshot)
+        # sink.latest_snapshot)
         batch_touch = (
             batch_df.filter(F.col(type_col) != conversion_type)
             .groupBy(F.col(user_col).alias("user_id"))
@@ -311,20 +282,9 @@ def make_attribution_sink(
             )
         else:
             merged = batch_touch
-        os.makedirs(touch_dir, exist_ok=True)
         write_atomic(merged, f"{touch_dir}/{batch_id}", output_format="parquet")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not _land(batch_df, batch_id):
-            return  # replayed batch, already applied
-        # prune snapshots this batch's commit made unreachable: every
-        # LATER batch resolves a snapshot id >= this one, and a replay
-        # of THIS batch is ledger-skipped, so ids < batch_id are dead
-        for d in os.listdir(touch_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{touch_dir}/{d}", ignore_errors=True)
-
-    return _sink
+    return prune_after_land(_land, touch_dir)
 
 
 def stream_attribution(
@@ -339,7 +299,6 @@ def stream_attribution(
     value_col: str = "value",
     id_col: str = "event_id",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the attribution-maintaining stream; returns the
     StreamingQuery.  ``events`` is a streaming DataFrame with the batch
@@ -355,9 +314,4 @@ def stream_attribution(
         value_col=value_col,
         id_col=id_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

@@ -33,6 +33,7 @@ from pyspark.sql.utils import AnalysisException
 from ..ledger import once_per_batch
 from ..operators.relational import cdc_apply
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def frontier_dir_for(base_dir: str) -> str:
@@ -48,7 +49,6 @@ def stream_cdc_apply(
     op_col: str = "op",
     table_name: str = "cdc_base",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the snapshot-maintaining changelog stream; returns the
     StreamingQuery. ``base_dir`` must hold the initial snapshot (the
@@ -96,9 +96,4 @@ def stream_cdc_apply(
             new_frontier = batch_max
         write_atomic(new_frontier, frontier_dir, output_format="parquet")
 
-    writer = changes.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(changes, _sink, checkpoint_dir)

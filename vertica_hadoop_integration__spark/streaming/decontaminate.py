@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from ..ledger import once_per_batch
 from ..operators.corpus import decontaminate
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def stream_decontaminate_load(
@@ -34,7 +35,6 @@ def stream_decontaminate_load(
     id_col: str = "doc_id",
     shingle_n: int = 5,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the decontaminating ingest stream; returns the
     StreamingQuery.
@@ -58,9 +58,4 @@ def stream_decontaminate_load(
         )
         write_atomic(clean, os.path.join(dest_dir, f"batch={key}"))
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(docs, _sink, checkpoint_dir)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..ledger import once_per_batch
 from ..operators.dedup import minhash_dedup, minhash_index, minhash_probe
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def _self_dedup(
@@ -71,7 +72,6 @@ def stream_dedup_load(
     bands: int = 8,
     min_jaccard: float = 0.8,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the deduplicating ingest stream; returns the StreamingQuery.
 
@@ -119,12 +119,7 @@ def stream_dedup_load(
         new_bands.write.mode("append").parquet(bands_path)
         new_verify.write.mode("append").parquet(verify_path)
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(docs, _sink, checkpoint_dir)
 
 
 def stream_chunk_dedup_load(
@@ -137,7 +132,6 @@ def stream_chunk_dedup_load(
     id_col: str = "doc_id",
     chunk_size: int = 20,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
     chunker: str = "fixed",
     boundary_mod: int = 16,
 ):
@@ -202,9 +196,4 @@ def stream_chunk_dedup_load(
             "append"
         ).parquet(hash_path)
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(docs, _sink, checkpoint_dir)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def _bin_expr(cuts: list[float], col: str):
@@ -121,7 +122,6 @@ def stream_drift_monitor(
     num_bins: int = 10,
     alarm_threshold: float = 0.2,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the drift-monitoring stream; returns the StreamingQuery.
     The serving table at ``out_dir`` holds one committed row per batch
@@ -172,12 +172,7 @@ def stream_drift_monitor(
             out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
         )
 
-    writer = values.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(values, _sink, checkpoint_dir)
 
 
 def freeze_reference_by_group(
@@ -249,7 +244,6 @@ def stream_drift_monitor_by_group(
     num_bins: int = 10,
     alarm_threshold: float = 0.2,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Per-segment streaming PSI: the grouped twin of
     stream_drift_monitor (and of the batch
@@ -338,9 +332,4 @@ def stream_drift_monitor_by_group(
             out, os.path.join(out_dir, f"batch={key}"), output_format="parquet"
         )
 
-    writer = values.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(values, _sink, checkpoint_dir)

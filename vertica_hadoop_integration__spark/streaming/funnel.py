@@ -40,14 +40,12 @@ replayed from between the state write and the ledger mark converges.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import latest_snapshot, prune_after_land, start_stream
 
 
 def stage_dir_for(report_dir: str) -> str:
@@ -57,19 +55,6 @@ def stage_dir_for(report_dir: str) -> str:
 def read_report(spark, report_dir: str) -> DataFrame:
     """(stage_idx, stage, n_users)."""
     return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_funnel_sink(
@@ -89,7 +74,7 @@ def make_funnel_sink(
     @once_per_batch(ledger_path, "funnel")
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = _latest_snapshot(spark, state_dir, batch_id)
+        state = latest_snapshot(spark, state_dir, batch_id)
         if state is None:
             state = spark.createDataFrame(
                 [],
@@ -130,7 +115,6 @@ def make_funnel_sink(
                     *[F.col(c) for c in tcols[i + 1:]],
                 )
             )
-        os.makedirs(state_dir, exist_ok=True)
         write_atomic(
             merged, f"{state_dir}/{batch_id}", output_format="parquet"
         )
@@ -152,14 +136,7 @@ def make_funnel_sink(
         )
         write_atomic(report, report_path, output_format="parquet")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not _land(batch_df, batch_id):
-            return  # replayed batch, already applied
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
-
-    return _sink
+    return prune_after_land(_land, state_dir)
 
 
 def stream_funnel(
@@ -171,7 +148,6 @@ def stream_funnel(
     type_col: str = "event_type",
     ts_col: str = "ts",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the funnel-maintaining stream; returns the StreamingQuery."""
     _sink = make_funnel_sink(
@@ -182,9 +158,4 @@ def stream_funnel(
         type_col=type_col,
         ts_col=ts_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..ledger import once_per_batch
 from ..operators.text import inverted_index
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def stream_index_load(
@@ -38,7 +39,6 @@ def stream_index_load(
     id_col: str = "doc_id",
     table_name: str = "inverted_index",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the index-maintaining ingest stream; returns the
     StreamingQuery. Deltas land under ``deltas_dir/batch=<id>``."""
@@ -53,12 +53,7 @@ def stream_index_load(
             output_format="parquet",
         )
 
-    writer = docs.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(docs, _sink, checkpoint_dir)
 
 
 def read_index(spark, deltas_dir: str) -> DataFrame:

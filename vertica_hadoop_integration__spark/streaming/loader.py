@@ -3,22 +3,24 @@
 a Structured Streaming sink.
 
 ``foreachBatch`` gives each micro-batch a batch id and exactly-once
-semantics against idempotent sinks: we write each batch's partitions
-with the same atomic-rename commit the batch pipeline uses, then record
+semantics against idempotent sinks: we write each batch as ``batch=<id>/``
+with the same atomic-rename commit the batch pipeline uses
+(``writers.write_atomic``: hidden staging, and a replay replaces a batch
+dir that landed before a crash rather than appending to it), then record
 (table, batch_id) in the ledger — a replayed batch id is skipped, which
 is precisely the reference's is_complete re-run guard at micro-batch
-granularity.
+granularity. Both loaders start through ``sink.start_stream``.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def stream_load(
@@ -28,7 +30,6 @@ def stream_load(
     table_name: str = "events_stream",
     output_format: str = "orc",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start an incremental streaming load into ``dest_dir``.
 
@@ -46,12 +47,7 @@ def stream_load(
             output_format=output_format,
         )
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)
 
 
 def stream_partitioned_load(
@@ -61,7 +57,6 @@ def stream_partitioned_load(
     partition_cols: list[str],
     table_name: str = "events_partitioned",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming ingest into a two-level hive layout:
     ``batch=<id>/pcol=value/`` — the batch level gives exactly-once
@@ -76,35 +71,16 @@ def stream_partitioned_load(
     partition with only their own rows — streaming appends must be
     batch-keyed. Fold batches together on a compaction cadence
     (sources/maintenance.py::compact_path or a write_partitioned
-    rewrite) once a partition stops receiving data. Returns the
-    StreamingQuery."""
-    import uuid as _uuid
+    rewrite) once a partition stops receiving data. A replay of a batch
+    whose dir landed before the ledger mark rewrites that dir whole
+    (``write_atomic`` sets the old one aside), so it never double-appends.
+    Returns the StreamingQuery."""
 
     @once_per_batch(ledger_path, table_name)
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        dest = os.path.join(dest_dir, f"batch={batch_id}")
-        if os.path.exists(dest):
-            # Crash window: the rename landed but mark_complete did not.
-            # The batch directory is complete (os.replace is atomic), so
-            # the replay must only finish the bookkeeping (the guard marks
-            # the key on return) — re-writing would raise ENOTEMPTY on
-            # the replace and wedge the stream.
-            return
-        tmp = os.path.join(dest_dir, f".inprogress-{_uuid.uuid4().hex[:8]}")
-        try:
-            (
-                batch_df.write.mode("overwrite")
-                .partitionBy(*partition_cols)
-                .parquet(tmp)
-            )
-            os.replace(tmp, dest)
-        finally:
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
+        write_atomic(
+            batch_df, os.path.join(dest_dir, f"batch={batch_id}"),
+            output_format="parquet", partition_by=partition_cols,
+        )
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

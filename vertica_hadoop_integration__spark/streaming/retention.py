@@ -41,14 +41,17 @@ converges to the same report.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import (
+    land_delta,
+    latest_snapshot,
+    prune_after_land,
+    start_stream,
+)
 
 
 def seen_dir_for(report_dir: str) -> str:
@@ -58,19 +61,6 @@ def seen_dir_for(report_dir: str) -> str:
 def read_report(spark, report_dir: str) -> DataFrame:
     """(cohort_start, period_offset, n_users)."""
     return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_retention_sink(
@@ -89,7 +79,7 @@ def make_retention_sink(
     @once_per_batch(ledger_path, "retention")
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = _latest_snapshot(spark, state_dir, batch_id)
+        state = latest_snapshot(spark, state_dir, batch_id)
         pairs = (
             batch_df.select(
                 F.col(user_col).alias("user_id"),
@@ -141,18 +131,8 @@ def make_retention_sink(
             .groupBy("cohort_start", "period_offset")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(
-            delta, f"{deltas_root}/{batch_id}", output_format="parquet"
-        )
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
         report = (
-            spark.read.parquet(*committed)
+            land_delta(delta, report_dir, batch_id)
             .groupBy("cohort_start", "period_offset")
             .agg(F.sum("n_users").cast("bigint").alias("n_users"))
         )
@@ -165,19 +145,11 @@ def make_retention_sink(
             advanced = state.select(
                 "user_id", "cohort_start", "period_start"
             ).unionByName(advanced)
-        os.makedirs(state_dir, exist_ok=True)
         write_atomic(
             advanced, f"{state_dir}/{batch_id}", output_format="parquet"
         )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not _land(batch_df, batch_id):
-            return  # replayed batch, already applied
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
-
-    return _sink
+    return prune_after_land(_land, state_dir)
 
 
 def stream_retention(
@@ -188,7 +160,6 @@ def stream_retention(
     ts_col: str = "ts",
     granularity: str = "week",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the retention-maintaining stream; returns the
     StreamingQuery."""
@@ -199,9 +170,4 @@ def stream_retention(
         ts_col=ts_col,
         granularity=granularity,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

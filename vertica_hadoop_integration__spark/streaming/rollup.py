@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..ledger import once_per_batch
 from ..operators.temporal import refresh_rollup
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def stream_rollup_refresh(
@@ -35,7 +36,6 @@ def stream_rollup_refresh(
     value_col: str = "value",
     granularities: tuple[str, ...] = ("minute", "hour", "day"),
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the rollup-maintaining ingest stream; returns the
     StreamingQuery. The rollup at ``rollup_dir`` is partitioned by
@@ -67,9 +67,4 @@ def stream_rollup_refresh(
             granularities=granularities,
         )
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

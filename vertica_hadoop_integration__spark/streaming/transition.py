@@ -43,14 +43,17 @@ converges to the same report.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import (
+    land_delta,
+    latest_snapshot,
+    prune_after_land,
+    start_stream,
+)
 
 
 def last_dir_for(report_dir: str) -> str:
@@ -60,19 +63,6 @@ def last_dir_for(report_dir: str) -> str:
 def read_report(spark, report_dir: str) -> DataFrame:
     """(from_type, to_type, n_transitions, p_transition)."""
     return spark.read.parquet(report_dir.rstrip("/") + "/report")
-
-
-def _latest_snapshot(spark, state_dir: str, before_batch_id: int):
-    try:
-        ids = [
-            int(d) for d in os.listdir(state_dir)
-            if d.isdigit() and int(d) < before_batch_id
-        ]
-    except FileNotFoundError:
-        return None
-    if not ids:
-        return None
-    return spark.read.parquet(f"{state_dir}/{max(ids)}")
 
 
 def make_transition_sink(
@@ -91,7 +81,7 @@ def make_transition_sink(
     @once_per_batch(ledger_path, "transition")
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        state = _latest_snapshot(spark, state_dir, batch_id)
+        state = latest_snapshot(spark, state_dir, batch_id)
         rows = batch_df.select(
             F.col(user_col).alias("_u"),
             F.col(ts_col).alias("_t"),
@@ -124,16 +114,8 @@ def make_transition_sink(
             .groupBy("from_type", "to_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        deltas_root = f"{report_dir.rstrip('/')}/deltas"
-        os.makedirs(deltas_root, exist_ok=True)
-        write_atomic(delta, f"{deltas_root}/{batch_id}", output_format="parquet")
-        committed = sorted(
-            f"{deltas_root}/{d}"
-            for d in os.listdir(deltas_root)
-            if d.isdigit()
-        )
         counts = (
-            spark.read.parquet(*committed)
+            land_delta(delta, report_dir, batch_id)
             .groupBy("from_type", "to_type")
             .agg(F.sum("n").cast("bigint").alias("n_transitions"))
         )
@@ -177,17 +159,9 @@ def make_transition_sink(
             )
         else:
             merged = batch_last
-        os.makedirs(state_dir, exist_ok=True)
         write_atomic(merged, f"{state_dir}/{batch_id}", output_format="parquet")
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not _land(batch_df, batch_id):
-            return  # replayed batch, already applied
-        for d in os.listdir(state_dir):
-            if d.isdigit() and int(d) < batch_id:
-                shutil.rmtree(f"{state_dir}/{d}", ignore_errors=True)
-
-    return _sink
+    return prune_after_land(_land, state_dir)
 
 
 def stream_transition_matrix(
@@ -199,7 +173,6 @@ def stream_transition_matrix(
     ts_col: str = "ts",
     id_col: str = "event_id",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the transition-matrix-maintaining stream; returns the
     StreamingQuery."""
@@ -211,9 +184,4 @@ def stream_transition_matrix(
         ts_col=ts_col,
         id_col=id_col,
     )
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)

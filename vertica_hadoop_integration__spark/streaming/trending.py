@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..ledger import once_per_batch
 from ..sources.writers import write_atomic
+from .sink import start_stream
 
 
 def window_counts(
@@ -74,7 +75,6 @@ def stream_trending_load(
     ts_col: str = "ts",
     table_name: str = "events_trending",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Start the trending-maintaining ingest stream; returns the
     StreamingQuery. ``trending_dir`` is partitioned by window_start day
@@ -120,9 +120,4 @@ def stream_trending_load(
                 .parquet(trending_dir)
             )
 
-    writer = events.writeStream.foreachBatch(_sink).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(events, _sink, checkpoint_dir)
